@@ -1,0 +1,45 @@
+package perfbench
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/**
+ * The local filesystem with every metadata and data operation counted.
+ * Hadoop's local filesystem keeps byte counts but no operation counts,
+ * so the traced run installs this class as `fs.file.impl`.
+ */
+final class CountingFileSystem extends LocalFileSystem {
+  import CountingFileSystem._
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    readOps.incrementAndGet(); super.open(f, bufferSize)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    readOps.incrementAndGet(); super.listStatus(f)
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    readOps.incrementAndGet(); super.getFileStatus(f)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    writeOps.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    writeOps.incrementAndGet(); super.rename(src, dst)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    writeOps.incrementAndGet(); super.delete(f, recursive)
+  }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    writeOps.incrementAndGet(); super.mkdirs(f, permission)
+  }
+}
+
+object CountingFileSystem {
+  val readOps = new AtomicLong()
+  val writeOps = new AtomicLong()
+}
